@@ -1,5 +1,5 @@
-"""Micro-bench: suite-identical index build + bm25_100q_batch/maxscore
-legs, repeated R times — the attribution protocol behind the round-5
+"""Micro-bench: suite-identical index build + bm25_100q_batch leg,
+repeated R times — the attribution protocol behind the round-5
 drift analysis in BENCH/BASELINE.md (run it against two checkouts
 back-to-back on the same host; a git worktree of the older commit works).
 
@@ -49,14 +49,11 @@ qrows = [(f"q{i}", " ".join(rng.choice(vocab_terms, size=rng.integers(1, 5))))
          for i in range(100)]
 queries = spark.createDataFrame(qrows, "query_id string, text string")
 
-out = {"label": label, "build": round(t_build, 3), "batch": [], "maxscore": []}
+out = {"label": label, "build": round(t_build, 3), "batch": []}
 for _ in range(R):
     t0 = time.perf_counter()
     search(idx, queries, k=100).count()
     out["batch"].append(round(time.perf_counter() - t0, 3))
-    t0 = time.perf_counter()
-    search(idx, queries, k=100, mode="maxscore").count()
-    out["maxscore"].append(round(time.perf_counter() - t0, 3))
 
 print("MICROBENCH " + json.dumps(out))
 spark.stop()

@@ -3193,7 +3193,7 @@ def q_bm25_topk_synonyms(spark, sf_dir):
 
     idx = _entry_index_synonyms(spark, sf_dir)
     q = _ldf(spark, SYN_QUERIES, "query_id string, text string")
-    run = search(idx, q, k=10, mode="maxscore")
+    run = search(idx, q, k=10)
     return run.select(
         "query_id",
         F.regexp_replace("doc_id", "^doc://", "").alias("doc_id"),
@@ -3204,12 +3204,12 @@ def q_bm25_topk_synonyms(spark, sf_dir):
 
 def q_bm25_topk_indexed(spark, sf_dir):
     """Same answer as q_bm25_topk, produced by the FULL engine: persistent
-    block-max varbyte index + distributed MaxScore kernel. Sharing the
+    block-max varbyte index + distributed shard top-k kernel. Sharing the
     ad-hoc oracle SQL makes the whole indexed path DuckDB-checked."""
     from openmatch_spark.query import search
 
     idx = _entry_index(spark, sf_dir)
-    run = search(idx, _queries_df(spark), k=10, mode="maxscore")
+    run = search(idx, _queries_df(spark), k=10)
     # index doc ids are 'doc://<id>' urls; strip for table-level comparison
     return run.select(
         "query_id",
@@ -3247,7 +3247,7 @@ def q_bm25_topk_rebaselined(spark, sf_dir):
         compact_index(spark, d, rebaseline_stats=True)
         _IDX_CACHE[key] = d
     idx = _load_entry_index(spark, _IDX_CACHE[key])
-    run = search(idx, _queries_df(spark), k=10, mode="maxscore")
+    run = search(idx, _queries_df(spark), k=10)
     return run.select(
         "query_id",
         F.regexp_replace("doc_id", "^doc://", "").alias("doc_id"),
@@ -3281,7 +3281,7 @@ def q_bm25_topk_pruned(spark, sf_dir):
         compact_index(spark, d, prune_keep_per_term=_PRUNE_KEEP)
         _IDX_CACHE[key] = d
     idx = _load_entry_index(spark, _IDX_CACHE[key])
-    run = search(idx, _queries_df(spark), k=10, mode="maxscore")
+    run = search(idx, _queries_df(spark), k=10)
     return run.select(
         "query_id",
         F.regexp_replace("doc_id", "^doc://", "").alias("doc_id"),
@@ -3365,7 +3365,7 @@ def q_bm25_topk_deleted(spark, sf_dir):
         )
         _IDX_CACHE[key] = d
     idx = _load_entry_index(spark, _IDX_CACHE[key])
-    run = search(idx, _queries_df(spark), k=10, mode="maxscore")
+    run = search(idx, _queries_df(spark), k=10)
     return run.select(
         "query_id",
         F.regexp_replace("doc_id", "^doc://", "").alias("doc_id"),
@@ -3409,7 +3409,7 @@ def q_bm25_topk_upserted(spark, sf_dir):
         compact_index(spark, d, rebaseline_stats=True)
         _IDX_CACHE[key] = d
     idx = _load_entry_index(spark, _IDX_CACHE[key])
-    run = search(idx, _queries_df(spark), k=10, mode="maxscore")
+    run = search(idx, _queries_df(spark), k=10)
     return run.select(
         "query_id",
         F.regexp_replace("doc_id", "^doc://", "").alias("doc_id"),
@@ -3485,7 +3485,7 @@ def q_qld_jm(spark, sf_dir):
 def q_qld_topk_indexed(spark, sf_dir):
     """Same answer via the FULL engine with scoring="qld": precomputed
     Dirichlet payload weights in the block-max varbyte index (zero-clamped
-    postings dropped at build), searched by the unchanged MaxScore kernel —
+    postings dropped at build), searched by the unchanged BM25 kernel —
     the oracle never sees the index, only the formula."""
     from openmatch_spark.fixtures import documents_as_pages
     from openmatch_spark.index import build_index, load_index
@@ -3500,7 +3500,7 @@ def q_qld_topk_indexed(spark, sf_dir):
         )
         _IDX_CACHE[key] = d
     idx = _load_entry_index(spark, _IDX_CACHE[key])
-    run = search(idx, _queries_df(spark), k=10, mode="maxscore")
+    run = search(idx, _queries_df(spark), k=10)
     return run.select(
         "query_id",
         F.regexp_replace("doc_id", "^doc://", "").alias("doc_id"),

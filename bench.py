@@ -131,7 +131,7 @@ def suite() -> dict:
     )
     idx = load_index(spark, idx_dir)
 
-    # query throughput: 100-query batch, k=100, block-max MaxScore
+    # query throughput: 100-query batch, k=100
     vocab_terms = [r["term"] for r in idx.dictionary.orderBy(F.desc("df")).limit(500).collect()]
     import numpy as np
 
@@ -142,9 +142,6 @@ def suite() -> dict:
     ]
     queries = spark.createDataFrame(qrows, "query_id string, text string")
     timings["bm25_100q_batch"], _ = _timed(lambda: search(idx, queries, k=100).count())
-    timings["bm25_100q_maxscore"], _ = _timed(
-        lambda: search(idx, queries, k=100, mode="maxscore").count()
-    )
 
     # per-query latency sample (20 single-query jobs)
     lat = []
@@ -588,7 +585,7 @@ def _scaling_job(cores: int, n_docs: int) -> dict:
     build_index(spark, warm_pages, warm_dir, analyzer="dpr",
                 num_shards=32, num_term_buckets=16, block_size=128)
     warm_q = spark.createDataFrame(_gen_queries(32), "query_id string, text string")
-    search(load_index(spark, warm_dir), warm_q, k=100, mode="batch").count()
+    search(load_index(spark, warm_dir), warm_q, k=100).count()
     shutil.rmtree(warm_dir, ignore_errors=True)
 
     # IDENTICAL job at both parallelism levels: same shard/bucket/block
@@ -607,7 +604,7 @@ def _scaling_job(cores: int, n_docs: int) -> dict:
     qrows = _gen_queries(4096)
     queries = spark.createDataFrame(qrows, "query_id string, text string")
     idx = load_index(spark, idx_dir)
-    t_query, n_hits = _timed(lambda: search(idx, queries, k=100, mode="batch").count())
+    t_query, n_hits = _timed(lambda: search(idx, queries, k=100).count())
     spark.stop()
     shutil.rmtree(idx_dir, ignore_errors=True)
     shutil.rmtree(local_dir, ignore_errors=True)
@@ -640,11 +637,11 @@ def _query_leg(cores: int, idx_dir: str, n_queries: int = 4096, repeats: int = 2
     spark.sparkContext.setLogLevel("ERROR")
     idx = load_index(spark, idx_dir)
     warm = spark.createDataFrame(_gen_queries(64), "query_id string, text string")
-    search(idx, warm, k=100, mode="batch").count()
+    search(idx, warm, k=100).count()
     queries = spark.createDataFrame(_gen_queries(n_queries), "query_id string, text string")
     walls = []
     for _ in range(repeats):
-        t, _n = _timed(lambda: search(idx, queries, k=100, mode="batch").count())
+        t, _n = _timed(lambda: search(idx, queries, k=100).count())
         walls.append(t)
     spark.stop()
     import shutil

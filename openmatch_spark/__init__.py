@@ -7,11 +7,13 @@ metrics), with the BM25 first stage — which the reference delegates to
 external tools (docs/rr-msmarco-passage.md:164) — rebuilt natively:
 
 - inverted-index construction (salted, skew-aware, block-max, varbyte)
-- DAAT BM25 top-k with block-max pruning (k1=0.9, b=0.4, Lucene idf)
+- BM25 top-k in one vectorized per-shard scatter-gather kernel
+  (k1=0.9, b=0.4, Lucene idf)
 - deterministic rank semantics: (score DESC, doc_id ASC)
 
 Everything is DataFrame-declarative; Python appears only inside vectorized
-Arrow/pandas UDFs (tokenization, posting-block codecs, WAND kernel).
+Arrow/pandas UDFs (tokenization, posting-block codecs, the shard top-k
+kernel).
 """
 
 from openmatch_spark.session import get_spark, scoped_confs  # noqa: F401

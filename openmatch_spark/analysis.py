@@ -100,7 +100,7 @@ def tokenize_dpr_py(text: str) -> list[str]:
 #   returning strings directly instead of building match objects). 1.4x.
 #
 # Identity with tokenize_dpr_py is pinned by tests/test_round6_opt.py
-# (adversarial unicode battery + random-codepoint fuzz + full-corpus sweep).
+# (adversarial unicode battery + random-codepoint fuzz).
 _ASCII_DPR_RX = None
 _FAST_DPR_RX = None
 

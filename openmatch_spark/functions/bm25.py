@@ -95,7 +95,8 @@ def qld_weight_col(tf_col, cf_col, doclen_col, total_terms: float,
     this decomposition; Lucene floors them at 0). Because the clamped weight
     is fully determined per (term, doc) once collection stats are frozen, a
     QLD index is just build_index(scoring="qld"): same payload layout, same
-    search kernels (non-negative weights keep MaxScore upper bounds valid),
+    search kernel (which keeps docs whose summed weight is > 0, so weights
+    must be non-negative),
     and exact-zero weights carry no posting at all — a doc whose every
     matched term clamps to 0 is absent from results (vs Lucene returning it
     with score 0; documented contract, replicated by the oracle's w > 0).
@@ -124,8 +125,8 @@ def qld_jm_weight_col(tf_col, cf_col, doclen_col, total_terms: float,
     for short queries, ~0.7 for long). Unlike the Dirichlet form there is
     no negative region — any matched term (tf >= 1) contributes a strictly
     positive weight, so no clamp and no dropped postings: a QLD-JM index
-    is build-compatible the same way (non-negative weights keep MaxScore
-    bounds valid). total_terms must be pre-guarded nonzero by the caller;
+    is build-compatible the same way (non-negative weights, as the search
+    kernel requires). total_terms must be pre-guarded nonzero by the caller;
     lambda must be in (0, 1)."""
     import pyspark.sql.functions as F
 

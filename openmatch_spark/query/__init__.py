@@ -6,7 +6,8 @@ far worse, was paid by EVERY Python worker: a kernel pickled from
 which triggers this package __init__ — so each of local[32]'s workers was
 importing the whole query surface to run a BM25 kernel. That worker-side
 import tax grew with every module added in round 4 and showed up as multi-
-second warmup on the bench's build/maxscore legs (BENCH r4→r5 notes).
+second warmup on the bench's build and per-query search legs (BENCH r4→r5
+notes).
 Lazy exports keep `from openmatch_spark.query import search` working while
 a worker unpickling a kernel imports only the module the kernel lives in.
 """

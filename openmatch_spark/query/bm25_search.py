@@ -1,26 +1,26 @@
 """Distributed BM25 top-k search over the packed index (SURVEY §3.2 Spark shape).
 
-Plan:
+Plan (one kernel for every batch size):
   queries ─tokenize─► (query_id, term, qtf)
           ─join dictionary─► matched terms (+ term_bucket)    [queries are small:
                                                                collected & broadcast]
-  postings ─bucket-pruned scan─► blocks for matched terms only
-           ─broadcast join query terms─► (query, term, block)
-           ─repartition(query_id, shard)─► applyInPandas kernel:
-                block-max MaxScore pruning + canonical re-score ─► shard top-k
-           ─join docmap─► doc_id
+  postings ─bucket/term-pruned scan─► blocks for matched terms only
+           ─repartition(shard)─► mapInPandas shard kernel: every block is
+                decoded once and scored for every query that holds its term,
+                canonical accumulation ─► per-(query, shard) top-k
+           ─rank() pre-cut (large batches)─► per-query top-k candidates
+           ─broadcast join docmap─► doc_id
            ─window (score DESC, doc_id ASC) rank<=k─► run(query_id, doc_id, score, rank)
 
 This is the reference's partition-wise search + score merge
 (dense_retriever.py:318-335 `SuccessiveRetriever`, utils.py:262-283
-`merge_retrieval_results_by_score`) as one declarative plan: per-(query,shard)
+`merge_retrieval_results_by_score`) as one declarative plan: per-shard
 partial top-k, then a final window top-k — with the first-seen-wins dup rule
 replaced by the deterministic (score DESC, doc_id ASC) rank everywhere
 (utils.py:141-146 relies on Python sort stability; we pin it down).
 
 Determinism: per-doc scores are summed in canonical ascending-term order in
-both engine and oracle; pruning (which visits terms by impact) only selects
-candidates — survivors are re-scored canonically before emission.
+both engine and oracle (oracle.BM25Oracle), so runs are bit-identical to it.
 
 Query-side weighting: a term repeated in the query multiplies its weight by
 its query term frequency (Lucene/Anserini semantics); OOV terms drop out at
@@ -116,12 +116,10 @@ def decoded_query_postings(
     qt = query_terms(index, queries, distributed_threshold)
     if not qt:
         return None, None
-    terms = sorted({t for (_, t, _, _) in qt})
-    buckets = sorted({b for (_, _, _, b) in qt})
-    pred = in_list("term_bucket", buckets) & in_list("term", terms)
+    blocks = _pruned_postings(index, qt)
     if block_cap is not None:
-        pred = pred & (F.col("block_id") < F.lit(int(block_cap)))
-    decoded = index.postings.where(pred).mapInArrow(
+        blocks = blocks.where(F.col("block_id") < F.lit(int(block_cap)))
+    decoded = blocks.mapInArrow(
         _decode_blocks_arrow,
         "shard int, term string, term_bucket int, doc_ord long, weight double",
     )
@@ -189,153 +187,56 @@ def query_term_counts(
     return qtf
 
 
-def _accumulate(ords_list, weights_list):
-    """Sum weights per doc, preserving list order for equal docs (canonical)."""
-    ords = np.concatenate(ords_list)
-    weights = np.concatenate(weights_list)
-    uniq, inv = np.unique(ords, return_inverse=True)
-    acc = np.zeros(uniq.shape[0], dtype=np.float64)
-    np.add.at(acc, inv, weights)
-    return uniq, acc
-
-
-def _score_group(
-    pdf: pd.DataFrame, k: int, mode: str, dead_map: dict | None = None
-) -> pd.DataFrame:
-    """Kernel for one (query_id, shard) group: blocks -> shard-local top-k.
-
-    dead_map: optional {shard -> sorted int64 ord array} of tombstoned docs
-    (BM25Index.deleted_ords). Masked at DECODE time, before any pruning
-    bound or top-k cut: a deleted doc must neither consume a result slot
-    nor inflate the MaxScore theta that prunes live candidates."""
-    qid = pdf["query_id"].iloc[0]
-    shard = int(pdf["shard"].iloc[0])
-    dead = dead_map.get(shard) if dead_map else None
-
-    # decode lazily per term; terms visited by impact for pruning,
-    # but final scores are recomputed in ascending-term order.
-    terms = {}
-    for term, g in pdf.groupby("term", sort=True):
-        g = g.sort_values("block_id")
-        qtf = float(g["qtf"].iloc[0])
-        terms[term] = {
-            "qtf": qtf,
-            "blocks": g[["first_ord", "last_ord", "max_score", "docs", "scores"]],
-            "ub": qtf * float(g["max_score"].max()),
-        }
-
-    def decode_term(t, lo=None, hi=None, member=None):
-        """Decoded (ords, qtf*weights) for term t, optionally restricted."""
-        rows = terms[t]["blocks"]
-        if lo is not None:
-            rows = rows[(rows["last_ord"] >= lo) & (rows["first_ord"] <= hi)]
-        outs, outw = [], []
-        qtf = terms[t]["qtf"]
-        # zip over raw columns, not iterrows (a Series per row is ~10x
-        # slower and this loop runs per term per (query, shard) group)
-        for docs_b, scores_b in zip(rows["docs"], rows["scores"]):
-            o = decode_postings(docs_b)
-            w = np.frombuffer(scores_b, dtype=np.float64) * qtf
-            if member is not None:
-                m = np.isin(o, member)
-                o, w = o[m], w[m]
-            outs.append(o)
-            outw.append(w)
-        if not outs:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-        o, w = np.concatenate(outs), np.concatenate(outw)
-        if dead is not None and dead.size and o.size:
-            keep = ~np.isin(o, dead)
-            o, w = o[keep], w[keep]
-        return o, w
-
-    term_names = sorted(terms)
-    if mode == "daat" or len(term_names) == 1:
-        pairs = [decode_term(t) for t in term_names]
-        pairs = [p for p in pairs if p[0].size]
-        if not pairs:
-            return pd.DataFrame(columns=["query_id", "shard", "doc_ord", "score"])
-        uniq, acc = _accumulate([p[0] for p in pairs], [p[1] for p in pairs])
-    else:
-        # Block-max MaxScore (TAAT flavor): visit terms by descending upper
-        # bound; once the remaining upper-bound sum can't beat the current
-        # kth score, new docs are provably out — restrict remaining terms to
-        # the candidate set (and to candidate ord-range -> block skipping).
-        by_impact = sorted(term_names, key=lambda t: -terms[t]["ub"])
-        rem = [terms[t]["ub"] for t in by_impact]
-        suffix = np.cumsum(rem[::-1])[::-1]
-        uniq = np.empty(0, dtype=np.int64)
-        acc = np.empty(0, dtype=np.float64)
-        frozen = False
-        for j, t in enumerate(by_impact):
-            if frozen and uniq.size:
-                o, w = decode_term(t, lo=int(uniq.min()), hi=int(uniq.max()), member=uniq)
-            else:
-                o, w = decode_term(t)
-            if o.size:
-                uniq, acc = _accumulate([uniq, o], [acc, w])
-            if not frozen and j + 1 < len(by_impact) and uniq.size >= k:
-                theta = np.partition(acc, -k)[-k]
-                if suffix[j + 1] < theta:
-                    frozen = True
-        if not uniq.size:
-            return pd.DataFrame(columns=["query_id", "shard", "doc_ord", "score"])
-        # canonical re-score of the top candidates (ascending-term sum order)
-        m = min(uniq.size, max(4 * k, 64))
-        cand = uniq[np.argsort(-acc, kind="stable")[:m]]
-        cand.sort()
-        pairs = [decode_term(t, lo=int(cand.min()), hi=int(cand.max()), member=cand) for t in term_names]
-        pairs = [p for p in pairs if p[0].size]
-        uniq, acc = _accumulate([p[0] for p in pairs], [p[1] for p in pairs])
-
-    # shard-local top-k; doc_ord asc == doc_id asc within a shard (docmap
-    # ordinals are assigned by doc_id sort), so this tie-break is final.
-    order = np.lexsort((uniq, -acc))[:k]
-    return pd.DataFrame(
-        {
-            "query_id": qid,
-            "shard": shard,
-            "doc_ord": uniq[order],
-            "score": acc[order],
-        }
+def _pruned_postings(index: BM25Index, matched: list) -> DataFrame:
+    """Posting blocks of the matched terms only: term_bucket prunes
+    partition directories, term prunes row groups (PushedFilters)."""
+    buckets = sorted({b for (_, _, _, b) in matched})
+    terms = sorted({t for (_, t, _, _) in matched})
+    return index.postings.where(
+        in_list("term_bucket", buckets) & in_list("term", terms)
     )
 
 
-def _batch_partials(
-    pruned: DataFrame, matched: list, k: int, num_shards: int,
-    dead_map: dict | None = None,
-    cursor_scores: dict | None = None,
-    keep_map: dict | None = None,
-) -> DataFrame:
-    """Batch scatter-gather mode: one pass over each matched posting block.
-
-    Per-query modes duplicate every block row once per query that contains
-    the term (the broadcast join); for 100+ query batches over Zipfian
-    vocabularies that multiplies shuffle volume by the mean term fan-out.
-    Batch mode instead repartitions blocks by shard (a doc's postings never
-    leave its shard, so per-shard accumulation yields COMPLETE scores) and
-    scores all queries in one vectorized kernel per shard.
-
-    Canonical determinism: the kernel buffers encoded payloads per (shard,
-    term) and accumulates terms in ascending-term order, so sums are
-    bit-identical to the per-query modes and the oracle.
-    """
+def _query_fanout(matched: list) -> tuple[list, dict]:
+    """(qids, fanout): the batch's sorted query ids and term ->
+    [(query_index, weight)] — the query side of the shard kernel."""
     qids = sorted({q for (q, _, _, _) in matched})
     qidx = {q: i for i, q in enumerate(qids)}
-    # term -> [(query_index, qtf)]
     fanout: dict[str, list[tuple[int, float]]] = {}
     for q, t, c, _ in matched:
         fanout.setdefault(t, []).append((qidx[q], c))
+    return qids, fanout
+
+
+def _batch_partials(
+    index: BM25Index, matched: list, k: int,
+    dead_map: dict | None = None,
+    cursors: dict | None = None,
+    keep_map: dict | None = None,
+) -> DataFrame:
+    """Per-(query, shard) top-k partials in one pass over each matched
+    posting block.
+
+    Blocks repartition by shard (a doc's postings never leave its shard, so
+    per-shard accumulation yields COMPLETE scores) and one vectorized kernel
+    per shard scores every query of the batch. A block row is read once no
+    matter how many queries hold its term — no per-query fan-out of block
+    rows through the shuffle.
+
+    Canonical determinism: the kernel buffers encoded payloads per (shard,
+    term) and accumulates terms in ascending-term order, so sums are
+    bit-identical to the oracle.
+    """
+    qids, fanout = _query_fanout(matched)
     # per-query search_after cursor score (query/paging.py): NaN = no cursor.
     # The kernel restricts candidates to score <= cursor and emits ALL docs
     # tied AT the cursor score (any of them may survive the exact
     # (score, doc_id) cursor predicate applied after the docmap join) plus
     # the deterministic top-k of the strictly-below set.
-    cur = np.full(len(qids), np.nan)
-    if cursor_scores:
-        for q, cs in cursor_scores.items():
-            if q in qidx:
-                cur[qidx[q]] = cs
+    cursors = cursors or {}
+    cur = np.array(
+        [float(cursors[q][0]) if q in cursors else np.nan for q in qids]
+    )
 
     def kernel(batches):
         buf: dict[int, dict[str, list]] = {}  # shard -> term -> [(ords, w)]
@@ -356,10 +257,15 @@ def _batch_partials(
 
     # per-shard accumulation needs every block of a shard in one partition;
     # explicit N (not repartition("shard") alone) stops AQE from coalescing
-    # the exchange to a single task and serializing the kernel
-    n_parts = max(1, min(num_shards, pruned.sparkSession.sparkContext.defaultParallelism))
+    # the exchange to a single task and serializing the kernel. N follows the
+    # live segment count, NOT stats["num_shards"]: incremental ingest grows
+    # the segment set and compaction shrinks it, while build-time stats stay
+    # frozen (committed_shards is memoized, no job)
+    n_segments = len(index.committed_shards())
+    n_parts = max(1, min(n_segments, index.spark.sparkContext.defaultParallelism))
     return (
-        pruned.select("shard", "term", "docs", "scores")
+        _pruned_postings(index, matched)
+        .select("shard", "term", "docs", "scores")
         .repartition(n_parts, "shard")
         .mapInPandas(kernel, _KERNEL_OUT)
     )
@@ -454,24 +360,18 @@ def search(
     index: BM25Index,
     queries: DataFrame,
     k: int = 100,
-    mode: str = "batch",
     remove_identical: bool = False,
 ) -> DataFrame:
-    """Top-k BM25 run: (query_id, doc_id, score, rank).
-
-    mode="batch" (default): single-pass scatter-gather, best throughput and
-    latency for typical query batches. mode="maxscore": per-(query, shard)
-    block-max pruning kernel — the scale path when an individual query's
-    posting volume dwarfs its shard's doc count. mode="daat": exhaustive
-    per-query kernel (test oracle for the pruned paths). All three are
-    bit-identical (canonical ascending-term accumulation).
+    """Top-k BM25 run: (query_id, doc_id, score, rank), bit-identical to
+    oracle.BM25Oracle (canonical ascending-term accumulation). Every batch
+    size runs the same plan: the shard kernel of `_batch_partials`, then the
+    docmap hydrate and final window of `_rank_run`.
 
     remove_identical drops hits where doc_id == query_id
     (reference dense_retriever.py:252-253, flag arguments.py:207).
     """
     return search_terms(
-        index, query_terms(index, queries), k=k, mode=mode,
-        remove_identical=remove_identical,
+        index, query_terms(index, queries), k=k, remove_identical=remove_identical,
     )
 
 
@@ -479,7 +379,6 @@ def search_terms(
     index: BM25Index,
     matched: list,
     k: int = 100,
-    mode: str = "batch",
     remove_identical: bool = False,
     cursors: dict | None = None,
     keep_map: dict | None = None,
@@ -493,60 +392,44 @@ def search_terms(
     cursors (query/paging.py search_after): {query_id: (score, doc_id)} —
     only hits strictly after the cursor in the total (score DESC, doc_id
     ASC) order compete for the page's top-k; queries absent from the dict
-    get page 1. Batch mode only (the per-shard pass is exhaustive, so the
-    cursor restriction is exact; the pruned kernels would need
-    cursor-aware thresholds).
+    get page 1. The per-shard pass is exhaustive, so the cursor restriction
+    is exact.
 
     keep_map (query/filtered.py): {shard: sorted int64 ord array} allow
     mask applied at decode time, the same placement as the tombstone mask —
     a masked-out doc never consumes a top-k slot. A shard with no entry
     allows nothing.
     """
-    spark = index.spark
     if not matched:
-        return spark.createDataFrame(
+        return index.spark.createDataFrame(
             [], "query_id string, doc_id string, score double, rank int"
         )
-    buckets = sorted({b for (_, _, _, b) in matched})
-    terms = sorted({t for (_, t, _, _) in matched})
-    pruned = index.postings.where(
-        in_list("term_bucket", buckets)  # partition (directory) pruning
-        & in_list("term", terms)  # row-group pruning (PushedFilters)
-    )
-    # live segment count, NOT stats["num_shards"]: incremental ingest grows
-    # the segment set and compaction shrinks it, while build-time stats stay
-    # frozen — sizing the per-shard kernel partitioning from stats would
-    # under-parallelize a grown index (committed_shards is memoized, no job)
-    n_segments = len(index.committed_shards())
     # live-docs mask (tombstoned docs; index/deletes.py): a tiny driver-held
     # {shard -> sorted ord array} shipped in the kernel closures — the
     # Lucene liveDocs contract. {} (no deletes) costs nothing per row.
     dead_map = index.deleted_ords() or None
-    if cursors and mode != "batch":
-        raise ValueError("search_after cursors require mode='batch'")
-    if keep_map is not None and mode != "batch":
-        raise ValueError("attribute filtering requires mode='batch'")
-    if mode == "batch":
-        cursor_scores = (
-            {q: float(s) for q, (s, _) in cursors.items()} if cursors else None
-        )
-        partial = _batch_partials(
-            pruned, matched, k, n_segments, dead_map,
-            cursor_scores=cursor_scores, keep_map=keep_map,
-        )
-    else:
-        qt_small = inline_table(spark, 
-            [(q, t, c) for (q, t, c, _) in matched],
-            "query_id string, term string, qtf double",
-        )
-        blocks = pruned.join(F.broadcast(qt_small), "term").select(
-            "query_id", "shard", "term", "qtf", "block_id",
-            "first_ord", "last_ord", "max_score", "docs", "scores",
-        )
-        # groupBy.applyInPandas shuffles on its own keys; no pre-repartition
-        partial = blocks.groupBy("query_id", "shard").applyInPandas(
-            lambda pdf: _score_group(pdf, k, mode, dead_map), _KERNEL_OUT
-        )
+    partial = _batch_partials(
+        index, matched, k, dead_map, cursors=cursors, keep_map=keep_map,
+    )
+    return _rank_run(
+        index, partial, matched, k, cursors=cursors, remove_identical=remove_identical,
+    )
+
+
+def _rank_run(
+    index: BM25Index,
+    partial: DataFrame,
+    matched: list,
+    k: int,
+    cursors: dict | None = None,
+    remove_identical: bool = False,
+) -> DataFrame:
+    """Per-(query, shard) partials (_KERNEL_OUT shape) -> the final run
+    (query_id, doc_id, score, rank): rank pre-cut, broadcast docmap
+    hydrate, optional search_after predicate, final deterministic window.
+    Shared by search_terms and the filtered routes (query/filtered.py)."""
+    spark = index.spark
+    n_segments = len(index.committed_shards())
     # pre-reduce the per-(query, shard) partials to a per-query top-k cut
     # BEFORE the broadcast: partial is queries x shards x k rows, and at
     # 4000 shards (10^12 docs) driver-collecting that for a broadcast is a

@@ -84,7 +84,6 @@ def search_collapsed(
     key: Column | DataFrame,
     k: int = 10,
     depth: int | None = None,
-    mode: str = "batch",
     key_name: str = "collapse_key",
 ) -> DataFrame:
     """Top-k BM25 with field collapsing: run the normal engine to `depth`
@@ -97,5 +96,5 @@ def search_collapsed(
     depth = depth if depth is not None else 10 * k
     if depth < k:
         raise ValueError(f"depth ({depth}) must be >= k ({k})")
-    run = search(index, queries, k=depth, mode=mode)
+    run = search(index, queries, k=depth)
     return collapse_run(run, key, k=k, key_name=key_name)

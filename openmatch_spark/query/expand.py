@@ -295,7 +295,6 @@ def search_fuzzy(
     max_edits: int = 1,
     prefix_len: int = 1,
     max_expansions: int = 50,
-    mode: str = "batch",
 ) -> DataFrame:
     """Fuzzy top-k run (query_id, doc_id, score, rank): every query token
     matches vocabulary terms within max_edits Levenshtein edits (sharing the
@@ -309,7 +308,7 @@ def search_fuzzy(
         index, sorted({t for (_, t, _) in qtoks}), "fuzzy",
         max_edits, prefix_len, max_expansions,
     )
-    return search_terms(index, _weighted_matched(qtoks, by_tok), k=k, mode=mode)
+    return search_terms(index, _weighted_matched(qtoks, by_tok), k=k)
 
 
 def search_prefix(
@@ -317,7 +316,6 @@ def search_prefix(
     queries: DataFrame,
     k: int = 100,
     max_expansions: int = 50,
-    mode: str = "batch",
 ) -> DataFrame:
     """Prefix (trailing-wildcard) top-k run: every query token matches the
     vocabulary terms it prefixes (capped at max_expansions by df DESC, the
@@ -329,7 +327,7 @@ def search_prefix(
     by_tok = _expansions(
         index, sorted({t for (_, t, _) in qtoks}), "prefix", 0, 0, max_expansions
     )
-    return search_terms(index, _weighted_matched(qtoks, by_tok), k=k, mode=mode)
+    return search_terms(index, _weighted_matched(qtoks, by_tok), k=k)
 
 
 def wildcard_to_like(pattern: str) -> str:
@@ -444,7 +442,6 @@ def search_wildcard(
     queries: DataFrame,
     k: int = 100,
     max_expansions: int = 50,
-    mode: str = "batch",
 ) -> DataFrame:
     """Wildcard top-k run (Lucene WildcardQuery): each query token is a
     pattern (``*`` any run, ``?`` one char) matched against the vocabulary
@@ -463,7 +460,7 @@ def search_wildcard(
     by_tok = _expansions(
         index, sorted({t for (_, t, _) in qtoks}), "wildcard", 0, 0, max_expansions
     )
-    return search_terms(index, _weighted_matched(qtoks, by_tok), k=k, mode=mode)
+    return search_terms(index, _weighted_matched(qtoks, by_tok), k=k)
 
 
 # Lucene-RegexpQuery pattern surface restricted to the subset on which
@@ -523,7 +520,6 @@ def search_regexp(
     queries: DataFrame,
     k: int = 100,
     max_expansions: int = 50,
-    mode: str = "batch",
 ) -> DataFrame:
     """Regexp top-k run (Lucene RegexpQuery): each whitespace-separated
     query token is a regular expression matched against the ENTIRE
@@ -545,7 +541,7 @@ def search_regexp(
     by_tok = _expansions(
         index, sorted({t for (_, t, _) in qtoks}), "regexp", 0, 0, max_expansions
     )
-    return search_terms(index, _weighted_matched(qtoks, by_tok), k=k, mode=mode)
+    return search_terms(index, _weighted_matched(qtoks, by_tok), k=k)
 
 
 def search_synonyms(
@@ -554,7 +550,6 @@ def search_synonyms(
     synonyms,
     k: int = 100,
     include_original: bool = True,
-    mode: str = "batch",
 ) -> DataFrame:
     """Synonym-expanded top-k run (Lucene SynonymQuery / analysis-chain
     synonym graph, applied query-side): every analyzed query token also
@@ -600,7 +595,7 @@ def search_synonyms(
         for (qid, t), wgt in sorted(acc.items())
         if t in bucket_of
     ]
-    return search_terms(index, matched, k=k, mode=mode)
+    return search_terms(index, matched, k=k)
 
 
 def search_bool_prefix(

@@ -36,8 +36,8 @@ rows per member, and nothing corpus-sized ever reaches the driver. Members
 stay where they live — federation is the right tool for ad-hoc queries
 across indexes that are maintained separately (per-crawl, per-tenant,
 per-language); for a PERMANENT merge, compact_index(rebaseline_stats=True)
-re-packs into block-max form and restores the pruned kernels, which this
-row-level path deliberately forgoes.
+re-packs into the packed block form and restores the block-level shard
+kernel, which this row-level path deliberately forgoes.
 
 Members must be doc_id-disjoint (they are separate corpora, like Lucene
 shards); a doc_id present in two members is two documents that will both

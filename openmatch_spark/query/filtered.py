@@ -23,19 +23,23 @@ routes, picked by selectivity:
               zero driver bytes.
 
 All three routes produce bit-identical runs (tested; the kernel math is the
-shared `_shard_topk`).
+shared `_shard_topk`, the final ranking the shared `_rank_run` of plain
+search).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from openmatch_spark.index.load import BM25Index
-from openmatch_spark.functions.localrel import in_list
 from openmatch_spark.query.bm25_search import (
     _KERNEL_OUT,
+    _batch_partials,
+    _pruned_postings,
+    _query_fanout,
+    _rank_run,
     _shard_topk,
     query_terms,
     search_terms,
@@ -115,35 +119,20 @@ def search_filtered(
             n_total = index.docmap.count()
             route = "drop" if n_total - n_allowed <= max_driver_ords else "cogroup"
     if route == "keep":
-        return search_terms(index, matched, k=k, mode="batch",
-                            keep_map=_collect_mask(ords))
+        return search_terms(index, matched, k=k, keep_map=_collect_mask(ords))
     if route == "drop":
         # complement mask composes with tombstones through the same dead-ord
         # channel: a doc is skipped if deleted OR filtered out
         dis = index.docmap.select("shard", "doc_ord").exceptAll(ords)
-        drop = _collect_mask(dis)
-        dead = index.deleted_ords() or {}
-        merged = dict(drop)
-        for s, arr in dead.items():
-            merged[s] = np.unique(np.concatenate([merged.get(s, arr[:0]), arr]))
-        return _finish(index, _partials_with_dead(index, matched, k, merged), k)
-    if route == "cogroup":
-        return _finish(index, _cogroup_partials(index, matched, k, ords), k)
-    raise ValueError(f"unknown route: {route}")
-
-
-def _partials_with_dead(index, matched, k, dead_map):
-    """Batch partials with an explicit (possibly filter-augmented) dead map."""
-    from openmatch_spark.query.bm25_search import _batch_partials
-
-    buckets = sorted({b for (_, _, _, b) in matched})
-    terms = sorted({t for (_, t, _, _) in matched})
-    pruned = index.postings.where(
-        in_list("term_bucket", buckets) & in_list("term", terms)
-    )
-    return _batch_partials(
-        pruned, matched, k, len(index.committed_shards()), dead_map or None
-    )
+        merged = _collect_mask(dis)
+        for shard, arr in (index.deleted_ords() or {}).items():
+            merged[shard] = np.unique(np.concatenate([merged.get(shard, arr[:0]), arr]))
+        partial = _batch_partials(index, matched, k, merged or None)
+    elif route == "cogroup":
+        partial = _cogroup_partials(index, matched, k, ords)
+    else:
+        raise ValueError(f"unknown route: {route}")
+    return _rank_run(index, partial, matched, k)
 
 
 def _cogroup_partials(index, matched, k, ords: DataFrame):
@@ -153,19 +142,10 @@ def _cogroup_partials(index, matched, k, ords: DataFrame):
     (bit-identical math to the mask routes)."""
     import pandas as pd
 
-    qids = sorted({q for (q, _, _, _) in matched})
-    qidx = {q: i for i, q in enumerate(qids)}
-    fanout: dict[str, list] = {}
-    for q, t, c, _ in matched:
-        fanout.setdefault(t, []).append((qidx[q], c))
+    qids, fanout = _query_fanout(matched)
     cur = np.full(len(qids), np.nan)
     dead_map = index.deleted_ords() or None
-
-    buckets = sorted({b for (_, _, _, b) in matched})
-    terms_l = sorted({t for (_, t, _, _) in matched})
-    blocks = index.postings.where(
-        in_list("term_bucket", buckets) & in_list("term", terms_l)
-    ).select("shard", "term", "docs", "scores")
+    blocks = _pruned_postings(index, matched).select("shard", "term", "docs", "scores")
 
     def kernel(key, blocks_pdf: pd.DataFrame, ords_pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
@@ -188,18 +168,4 @@ def _cogroup_partials(index, matched, k, ords: DataFrame):
         blocks.groupBy("shard")
         .cogroup(ords.groupBy("shard"))
         .applyInPandas(kernel, _KERNEL_OUT)
-    )
-
-
-def _finish(index, partial, k):
-    """Docmap hydrate + final deterministic window (the shared tail of
-    search_terms, duplicated here for the explicit-partials routes)."""
-    hits = index.docmap.select("shard", "doc_ord", "doc_id").join(
-        F.broadcast(partial), ["shard", "doc_ord"]
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        hits.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
     )

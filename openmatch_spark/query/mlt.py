@@ -87,7 +87,6 @@ def more_like_this(
     min_df: int = 2,
     max_df_pct: float = 0.5,
     include_seed: bool = False,
-    mode: str = "batch",
 ) -> DataFrame:
     """Top-k documents most like each seed: (query_id, doc_id, score, rank)
     with query_id = the seed's doc_id. The seed itself is excluded unless
@@ -99,8 +98,8 @@ def more_like_this(
         min_tf=min_tf, min_df=min_df, max_df_pct=max_df_pct,
     )
     if include_seed:
-        return search_terms(index, matched, k=k, mode=mode)
+        return search_terms(index, matched, k=k)
     # retrieve k+1 so dropping the seed (usually rank 1) still leaves k
     # true neighbors; re-cut because the seed may not be in the top k+1
-    run = search_terms(index, matched, k=k + 1, mode=mode, remove_identical=True)
+    run = search_terms(index, matched, k=k + 1, remove_identical=True)
     return run.where(F.col("rank") <= k)

@@ -2,7 +2,7 @@
 Lucene searchAfter semantics) over the packed BM25 index.
 
 Page-2+ correctness cannot come from re-ranking page-1's output: the
-per-(query, shard) kernels emit only each shard's top-k, so a doc ranked
+per-shard kernel emits only each shard's top-k per query, so a doc ranked
 k+1 globally may have been cut in its shard. The cursor therefore goes INTO
 the kernel (query/bm25_search.py `_batch_partials`): candidates are
 restricted to score <= cursor_score (every doc tied AT the cursor score is
@@ -52,8 +52,8 @@ def search_after(
     """Next-page top-k run (query_id, doc_id, score, rank): ranks restart at
     1 within the page. cursors is {query_id: (score, doc_id)} from
     `page_cursors` (or any (score, doc_id) position in the total order);
-    queries without a cursor get page 1. Batch mode only — the exhaustive
-    per-shard pass makes the cursor restriction exact."""
+    queries without a cursor get page 1. The exhaustive per-shard pass
+    makes the cursor restriction exact."""
     return search_terms(
-        index, query_terms(index, queries), k=k, mode="batch", cursors=cursors or {}
+        index, query_terms(index, queries), k=k, cursors=cursors or {}
     )

@@ -202,11 +202,14 @@ class CompiledRules:
     gate already collects them), so a serving stream compiles its STATIC
     rule set once and every micro-batch builds pure-JVM inline tables
     from these rows instead of re-running the rule-side tokenize jobs
-    and pickled-RDD table builds per batch."""
+    and pickled-RDD table builds per batch. `analyzer` is the one the role
+    terms were tokenized with; percolate() refuses any other (docs
+    tokenized differently would silently miss every term)."""
 
-    __slots__ = ("roles", "req", "mph", "nph", "frules")
+    __slots__ = ("analyzer", "roles", "req", "mph", "nph", "frules")
 
-    def __init__(self, roles, req, mph, nph, frules):
+    def __init__(self, analyzer, roles, req, mph, nph, frules):
+        self.analyzer = analyzer
         self.roles = roles
         self.req = req
         self.mph = mph
@@ -218,7 +221,9 @@ def compile_rules(stored: DataFrame, analyzer: str = "simple") -> CompiledRules:
     """Collect + tokenize the rule table once, driver-side (same kernel
     semantics as the distributed role table: per-role DISTINCT terms,
     must∩should merged into must; phrase rows kept only when the phrase
-    analyzes to >= 1 token; filter rows kept only when non-blank)."""
+    analyzes to >= 1 token; filter rows kept only when non-blank). A NULL
+    query_id rule is skipped: the distributed path casts it to NULL, which
+    never survives the query_id equi-join, so it can never match."""
     from openmatch_spark.analysis import tokenize_py
 
     cols = set(stored.columns)
@@ -230,6 +235,8 @@ def compile_rules(stored: DataFrame, analyzer: str = "simple") -> CompiledRules:
     nph_rows: list[tuple[str, str]] = []
     frules: list[tuple[str, str]] = []
     for r in rows:
+        if r["query_id"] is None:
+            continue
         qid = str(r["query_id"])
         must_t.setdefault(qid, set()).update(tokenize_py(r["must"], analyzer))
         should_t.setdefault(qid, set()).update(
@@ -262,7 +269,9 @@ def compile_rules(stored: DataFrame, analyzer: str = "simple") -> CompiledRules:
          int(qid in mph_qids))
         for qid in sorted(must_t)
     ]
-    return CompiledRules(roles_rows, req_rows, mph_rows, nph_rows, frules)
+    return CompiledRules(
+        analyzer, roles_rows, req_rows, mph_rows, nph_rows, frules
+    )
 
 
 def percolate(
@@ -308,6 +317,11 @@ def percolate(
     the docs, producing (doc_id, fid) pass rows; matches for gated rules
     semi-join that set. Docs never shuffle for the gate."""
     if compiled is not None:
+        if compiled.analyzer != analyzer:
+            raise ValueError(
+                f"rules compiled with analyzer {compiled.analyzer!r}, "
+                f"percolate called with {analyzer!r}"
+            )
         # serving path: the static rule set was compiled ONCE (driver-side
         # rows); every batch builds pure-JVM inline tables — no rule-side
         # tokenize jobs, no isEmpty probes, no pickled-RDD scans per batch

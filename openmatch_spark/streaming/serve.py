@@ -35,7 +35,6 @@ def serve_queries(
     out_dir: str,
     checkpoint_dir: str,
     k: int = 100,
-    mode: str = "batch",
     available_now: bool = True,
     processing_time: str | None = None,
 ):
@@ -57,7 +56,7 @@ def serve_queries(
         )
         if not queries.take(1):
             return
-        run = search(index, queries, k=k, mode=mode).withColumn(
+        run = search(index, queries, k=k).withColumn(
             "batch_id", F.lit(int(batch_id)).cast("long")
         )
         (

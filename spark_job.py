@@ -271,8 +271,8 @@ def cmd_search(args) -> int:
             )
         run = search_filtered(idx, queries, allowed, k=args.k)
     else:
-        mode = args.mode
-        run = search(idx, queries, k=args.k, mode=args.mode)
+        mode = "bm25"
+        run = search(idx, queries, k=args.k)
     save_as_trec(run, args.out, run_id=args.run_id)
     print(json.dumps({"out": args.out, "k": args.k, "mode": mode}))
     return 0
@@ -415,7 +415,7 @@ def cmd_repl(args) -> int:
             break
         qn += 1
         q = spark.createDataFrame([(f"i{qn}", line)], "query_id string, text string")
-        run = search(idx, q, k=args.k, mode=args.mode)
+        run = search(idx, q, k=args.k)
         if corpus is not None:
             run = hydrate_run(run, corpus=corpus)
         for r in run.orderBy("rank").collect():
@@ -494,7 +494,6 @@ def main(argv=None) -> int:
     se.add_argument("--queries", required=True, help="TSV (qid\\ttext) or parquet")
     se.add_argument("--out", required=True)
     se.add_argument("--k", type=int, default=100)
-    se.add_argument("--mode", choices=["batch", "maxscore", "daat"], default="batch")
     se.add_argument("--phrase", action="store_true",
                     help="exact-phrase search over the positional sidecar")
     se.add_argument("--proximity", type=int, default=None, metavar="WITHIN",
@@ -586,7 +585,6 @@ def main(argv=None) -> int:
     rp.add_argument("--index", required=True)
     rp.add_argument("--corpus", default=None, help="parquet (doc_id, text) for snippets")
     rp.add_argument("--k", type=int, default=10)
-    rp.add_argument("--mode", choices=["batch", "maxscore", "daat"], default="maxscore")
     rp.set_defaults(fn=cmd_repl)
 
     args = p.parse_args(argv)

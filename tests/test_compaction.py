@@ -2,7 +2,7 @@
 
 The compaction contract: merging shards changes WHERE postings live, never
 WHAT a query returns — doc ids, ranks, and float64 scores are identical
-before and after, in every search mode. The manifest gate makes uncommitted
+before and after. The manifest gate makes uncommitted
 or retired segment dirs invisible to readers.
 """
 
@@ -16,10 +16,10 @@ from openmatch_spark.index import build_index, compact_index, load_index
 from openmatch_spark.query import search
 
 
-def _runs(idx, queries, k=10, mode="batch"):
+def _runs(idx, queries, k=10):
     return sorted(
         (r["query_id"], r["rank"], r["doc_id"], r["score"])
-        for r in search(idx, queries, k=k, mode=mode).collect()
+        for r in search(idx, queries, k=k).collect()
     )
 
 
@@ -38,15 +38,13 @@ def built(spark, tmp_path_factory):
 
 def test_compact_all_is_search_identical(spark, built):
     idx_dir, queries = built
-    before = {m: _runs(load_index(spark, idx_dir), queries, mode=m)
-              for m in ("batch", "maxscore", "daat")}
+    before = _runs(load_index(spark, idx_dir), queries)
     res = compact_index(spark, idx_dir)
     assert res["merged"] == [0, 1, 2, 3, 4] and res["new_shard"] == 5
 
     idx2 = load_index(spark, idx_dir)
     assert idx2.committed_shards() == [5]
-    for m in ("batch", "maxscore", "daat"):
-        assert _runs(idx2, queries, mode=m) == before[m], m
+    assert _runs(idx2, queries) == before
 
     # retired segment dirs are physically gone (path mode)
     assert sorted(

@@ -53,10 +53,9 @@ def _as_rank_map(rows):
     return out
 
 
-@pytest.mark.parametrize("mode", ["daat", "maxscore"])
-def test_rank_identical_vs_oracle(spark, index, oracle, query_rows, mode):
+def test_rank_identical_vs_oracle(spark, index, oracle, query_rows):
     queries = spark.createDataFrame(query_rows, QUERIES_SCHEMA)
-    run = search(index, queries, k=K, mode=mode).collect()
+    run = search(index, queries, k=K).collect()
     got = _as_rank_map(run)
     for qid, qtext in query_rows:
         expected = oracle.search(qtext, k=K)
@@ -89,27 +88,6 @@ def test_partition_invariance(spark, corpus_rows, query_rows, oracle, tmp_path_f
     for qid, qtext in query_rows:
         expected = oracle.search(qtext, k=K)
         assert [d_ for (_, d_, _) in got.get(qid, [])] == [d_ for (d_, _, _) in expected]
-
-
-def test_batch_mode_rank_identical(spark, index, oracle, query_rows):
-    queries = spark.createDataFrame(query_rows, QUERIES_SCHEMA)
-    run = search(index, queries, k=K, mode="batch").collect()
-    got = _as_rank_map(run)
-    for qid, qtext in query_rows:
-        expected = oracle.search(qtext, k=K)
-        mine = got.get(qid, [])
-        assert [d for (_, d, _) in mine] == [d for (d, _, _) in expected], (qid, qtext)
-        for (rk, d, s), (d2, s2, rk2) in zip(mine, expected):
-            assert rk == rk2 and d == d2
-            assert s == pytest.approx(s2, abs=1e-9)
-
-
-def test_batch_mode_bitwise_equal_to_daat(spark, index, query_rows):
-    """Canonical accumulation order => batch and daat sums are bit-identical."""
-    queries = spark.createDataFrame(query_rows, QUERIES_SCHEMA)
-    a = sorted(map(tuple, search(index, queries, k=K, mode="daat").collect()))
-    b = sorted(map(tuple, search(index, queries, k=K, mode="batch").collect()))
-    assert a == b
 
 
 def test_distributed_query_tokenization_identical(spark, tmp_path):

@@ -44,7 +44,7 @@ def test_bucket_partition_pruning(idx):
 
 
 def test_search_plan_shape(idx, spark):
-    run = search(idx, queries_df(spark, 4), k=10, mode="batch")
+    run = search(idx, queries_df(spark, 4), k=10)
     s = plan_summary(run)
     # hit set joins against docmap via broadcast — the docmap side must
     # never shuffle (it is corpus-sized)

@@ -200,15 +200,6 @@ def test_search_after_score_ties_cross_pages(spark, tmp_path_factory):
     assert _rows(p3) == _deep_slice(deep, 10, 12)
 
 
-def test_search_after_rejects_pruned_modes(spark, idx):
-    q = spark.createDataFrame([("q1", "term0001")], QUERIES_SCHEMA)
-    from openmatch_spark.query.bm25_search import query_terms
-
-    with pytest.raises(ValueError):
-        search_terms(idx, query_terms(idx, q), k=5, mode="maxscore",
-                     cursors={"q1": (1.0, "x")})
-
-
 # ---------------------------------------------------------------- filtered
 
 

@@ -187,7 +187,7 @@ def test_tokenize_dpr_fast_identity():
     to tokenize_dpr_py (the reference / oracle kernel) on: an adversarial
     unicode battery (case-expansion, titlecase digraphs, NFC-vs-NFD input,
     combining marks, non-ASCII spaces, format/control chars, supplementary
-    plane, final sigma), random-codepoint fuzz, and the sf0.001 corpus."""
+    plane, final sigma) and random-codepoint fuzz."""
     import random
 
     from openmatch_spark.analysis import tokenize_dpr_fast, tokenize_dpr_py
@@ -295,7 +295,9 @@ def test_percolate_compiled_rules_identity(spark):
     """percolate(compiled=compile_rules(...)) — the per-stream rule
     compile serve_percolation uses — must produce the identical match set
     as the uncompiled distributed plan, across role mixes, phrase rules,
-    filter-context gates, duplicate-qid rows, and min_should_match."""
+    filter-context gates, duplicate-qid rows, a NULL-qid row (the
+    distributed plan drops it at the query_id equi-join, so it never
+    matches), and min_should_match."""
     import json
     import random
 
@@ -326,6 +328,7 @@ def test_percolate_compiled_rules_identity(spark):
     # a duplicate-qid row (roles must merge across rows, like the
     # distributed union+groupBy does)
     rule_rows.append(("r0", vocab[0], None, None, None, None, None))
+    rule_rows.append((None, vocab[1], vocab[2], None, None, None, None))
     rules = spark.createDataFrame(
         rule_rows,
         "query_id string, must string, should string, must_not string,"
@@ -341,3 +344,18 @@ def test_percolate_compiled_rules_identity(spark):
                                       min_should_match=msm,
                                       compiled=comp).collect())
         assert a == b and a, msm
+
+
+def test_percolate_compiled_rejects_other_analyzer(spark):
+    """Rules compiled under one analyzer must not be applied to docs
+    tokenized under another: the term identity would silently differ."""
+    from openmatch_spark.query.percolate import compile_rules, percolate
+
+    docs = spark.createDataFrame([("d1", "alpha beta")], "doc_id string, text string")
+    rules = spark.createDataFrame(
+        [("r1", "beta", None, None)],
+        "query_id string, must string, should string, must_not string",
+    )
+    comp = compile_rules(rules, analyzer="simple")
+    with pytest.raises(ValueError, match="analyzer"):
+        percolate(docs, rules, analyzer="dpr", compiled=comp)
